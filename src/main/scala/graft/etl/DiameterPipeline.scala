@@ -81,11 +81,14 @@ object DiameterPipeline {
           it.toSeq,
           orderOf = _.framesList.split(" ").head.toLong,
           isRequest = _.request,
-          merge = { (req, res) =>
-            val msisdn = if (req.msisdn.nonEmpty) req.msisdn else res.msisdn
-            val imsi = if (req.imsi.nonEmpty) req.imsi else res.imsi
-            (req.copy(msisdn = msisdn, imsi = imsi), res.copy(msisdn = msisdn, imsi = imsi))
-          })
+          merge = enrich)
       }
+  }
+
+  /** J1 bidirectional msisdn/imsi fill of a matched (request, answer). */
+  def enrich(req: DiameterRec, res: DiameterRec): (DiameterRec, DiameterRec) = {
+    val msisdn = if (req.msisdn.nonEmpty) req.msisdn else res.msisdn
+    val imsi = if (req.imsi.nonEmpty) req.imsi else res.imsi
+    (req.copy(msisdn = msisdn, imsi = imsi), res.copy(msisdn = msisdn, imsi = imsi))
   }
 }

@@ -102,9 +102,9 @@ object Sigshark {
     * the carried-forward state (still-open transactions + tid-alias map)
     * and the transactions closed by this sequence. Shared verbatim by the
     * batch machine ([[runTcapMachine]] = step from empty + EOF flush) and
-    * the streaming operator (`streaming.TcapStream`, state spanning
+    * the streaming operator (`streaming.TcapTws`, state spanning
     * micro-batches) — one implementation, two execution modes, the same
-    * discipline as `Sessions`/`Stateful`. */
+    * discipline as `Stateful.reassembleStep`/`Stateful.correlateStep`. */
   private[graft] def stepTcap(prior: TcapSessState, pkts: Seq[TcapPkt],
       keepPartial: Boolean): (TcapSessState, Seq[Transaction]) = {
     final case class Open(startTsSec: Long, startUsec: Int, frames: mutable.ArrayBuffer[Long])

@@ -1,64 +1,65 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
+import graft.operators.Stateful
+import graft.operators.Stateful.Outcome
 import graft.streaming.Sessions.{CorrEvent, CorrPair}
 
-/** J1 correlation on the `transformWithState` API (Spark 4 arbitrary
-  * stateful processing — the SURVEY §2.10 "upgrade path" from
-  * flatMapGroupsWithState): explicit `ValueState` slot + a registered
-  * processing-time timer per pending request for the residue flush.
-  * Requires the RocksDB state store provider
-  * (`spark.sql.streaming.stateStore.providerClass`).
+/** J1 correlation ([[Stateful.correlateStep]]) on the `transformWithState`
+  * API (Spark 4 arbitrary stateful processing — the SURVEY §2.10 "upgrade
+  * path" from flatMapGroupsWithState): the pending request in a
+  * `ValueState` slot + a registered processing-time timer per pending
+  * request for the residue flush. `emit` maps each outcome, including the
+  * timer's flush, to output rows. Requires the RocksDB state store
+  * provider (`spark.sql.streaming.stateStore.providerClass`).
   */
-class CorrelateProcessor(timeoutMs: Long)
-    extends StatefulProcessor[String, CorrEvent, CorrPair] {
+class CorrelateProcessor[T, O](timeoutMs: Long, msgEnc: Encoder[T],
+    orderOf: T => Long, isRequest: T => Boolean)(emit: (String, Outcome[T]) => Iterator[O])
+    extends StatefulProcessor[String, T, O] {
 
-  @transient private var pending: ValueState[CorrEvent] = _
+  @transient private var pending: ValueState[T] = _
   // Expiry timestamp of the timer registered for the pending request. Kept so
   // a match can deleteTimer() it — otherwise the stale timer fires while a
   // LATER request is pending on the same key and flushes it spuriously.
   @transient private var expiry: ValueState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    pending = getHandle.getValueState[CorrEvent]("pending",
-      Encoders.product[CorrEvent], TTLConfig.NONE)
+    pending = getHandle.getValueState[T]("pending", msgEnc, TTLConfig.NONE)
     expiry = getHandle.getValueState[Long]("expiry",
       Encoders.scalaLong, TTLConfig.NONE)
   }
 
-  override def handleInputRows(key: String, rows: Iterator[CorrEvent],
-      timerValues: TimerValues): Iterator[CorrPair] = {
-    val out = Seq.newBuilder[CorrPair]
-    for (ev <- rows.toSeq.sortBy(_.frame)) {
-      if (ev.isRequest) {
-        if (!pending.exists()) { // D1: retransmission dropped
-          pending.update(ev)
+  override def handleInputRows(key: String, rows: Iterator[T],
+      timerValues: TimerValues): Iterator[O] = {
+    val prior = if (pending.exists()) Some(pending.get()) else None
+    val (next, outs) =
+      Stateful.correlateStep(prior, rows.toSeq.sortBy(orderOf).iterator, isRequest)
+    // a new pending request (or none) retires the old request's timer
+    if (next != prior) {
+      if (expiry.exists()) { getHandle.deleteTimer(expiry.get()); expiry.clear() }
+      next match {
+        case Some(req) =>
+          pending.update(req)
           val at = timerValues.getCurrentProcessingTimeInMs() + timeoutMs
           expiry.update(at)
           getHandle.registerTimer(at)
-        }
-      } else if (pending.exists()) {
-        out += CorrPair(key, pending.get().frame, ev.frame, matched = true)
-        if (expiry.exists()) getHandle.deleteTimer(expiry.get())
-        pending.clear(); expiry.clear()
-      } else {
-        out += CorrPair(key, -1L, ev.frame, matched = false)
+        case None => pending.clear()
       }
     }
-    out.result().iterator
+    outs.iterator.flatMap(emit(key, _))
   }
 
   override def handleExpiredTimer(key: String, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[CorrPair] = {
+      expiredTimerInfo: ExpiredTimerInfo): Iterator[O] = {
     // K3 residue flush: unmatched request aged out. Guard against a stale
     // timer racing a newer pending request: only flush if this expiry is the
     // one registered for the currently pending request.
     val isCurrent = pending.exists() && expiry.exists() &&
       expiry.get() == expiredTimerInfo.getExpiryTimeInMs()
     if (isCurrent) {
-      val out = Iterator(CorrPair(key, pending.get().frame, -1L, matched = false))
+      val out = emit(key, (Some(pending.get()), None))
       pending.clear(); expiry.clear()
       out
     } else Iterator.empty
@@ -67,11 +68,13 @@ class CorrelateProcessor(timeoutMs: Long)
 
 object CorrelateTws {
   def correlate(events: Dataset[CorrEvent], timeoutMs: Long): Dataset[CorrPair] = {
-    implicit val pairEnc: org.apache.spark.sql.Encoder[CorrPair] = Encoders.product[CorrPair]
-    implicit val strEnc: org.apache.spark.sql.Encoder[String] = Encoders.STRING
+    implicit val pairEnc: Encoder[CorrPair] = Encoders.product[CorrPair]
+    implicit val strEnc: Encoder[String] = Encoders.STRING
     events
       .groupByKey(_.key)
-      .transformWithState(new CorrelateProcessor(timeoutMs),
+      .transformWithState(
+        new CorrelateProcessor[CorrEvent, CorrPair](timeoutMs, Encoders.product[CorrEvent],
+          _.frame, _.isRequest)((key, o) => Iterator(Sessions.corrPair(key, o)(_.frame))),
         TimeMode.ProcessingTime(), OutputMode.Append())
   }
 }

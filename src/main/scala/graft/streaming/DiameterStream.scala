@@ -1,11 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.etl.{Diameter, DiameterRec, Packets}
+import graft.etl.{Diameter, DiameterPipeline, DiameterRec, Packets}
+import graft.operators.Stateful
 import graft.sources.Pcap
+import graft.streaming.GroupStep.{EventTime, ProcessingTime}
 
 /** [[DiameterStream.recordsEventTime]] carrier: the decoded record plus
   * its capture timestamp as an event-time column (top-level case class
@@ -17,9 +18,10 @@ final case class TimedDiameterRec(rec: DiameterRec, eventTime: java.sql.Timestam
   * file source watching a drop directory = the ingestion_queue
   * pattern"): `readStream(binaryFile)` over a capture drop-dir → frame
   * decode → Diameter decode → J1 correlation via
-  * `flatMapGroupsWithState`, with unmatched requests flushed by state
-  * timeout (the streaming analog of the EOF residue flush — an
-  * *extension*, the reference defines no late-data policy).
+  * `flatMapGroupsWithState` ([[GroupStep.correlate]]), with unmatched
+  * requests flushed by state timeout (the streaming analog of the EOF
+  * residue flush — an *extension*, the reference defines no late-data
+  * policy).
   *
   * This drop-dir path decodes single-segment messages (the
   * overwhelmingly common case) with a single stateful operator. For
@@ -47,13 +49,14 @@ object DiameterStream {
       .flatMap(Packets.decode _)
       .filter(p => p.srcPort == Diameter.Port || p.dstPort == Diameter.Port)
       .flatMap { p =>
-        val payload = p.ipProto match {
+        // every DATA chunk of an SCTP packet, as the batch path decodes them
+        val payloads = p.ipProto match {
           case Packets.ProtoSctp =>
-            Packets.sctpChunks(p).find(c => c.chunkType == 0 && c.payload.nonEmpty).map(_.payload)
-          case Packets.ProtoTcp if p.payload.nonEmpty => Some(p.payload)
-          case _ => None
+            Packets.sctpChunks(p).filter(c => c.chunkType == 0 && c.payload.nonEmpty).map(_.payload)
+          case Packets.ProtoTcp if p.payload.nonEmpty => Seq(p.payload)
+          case _ => Nil
         }
-        payload.flatMap(Diameter.decode).filter(_.commandCode != Diameter.CmdDeviceWatchdog)
+        payloads.flatMap(Diameter.decode).filter(_.commandCode != Diameter.CmdDeviceWatchdog)
           .map(m => DiameterRec(p.frameNo.toString, p.tsSec, p.tsUsec, p.srcIp, p.dstIp,
             p.pcapFilename, m.request, m.commandCode, m.hopByHopId, m.endToEndId,
             m.sessionId, m.originHost, m.originRealm, m.destinationHost,
@@ -63,39 +66,16 @@ object DiameterStream {
 
   def records(spark: SparkSession, watchDir: String, timeoutMs: Long = 60000): Dataset[DiameterRec] = {
     import spark.implicits._
-    decoded(spark, watchDir)
-      // unlike the batch path, the correlation key does NOT include the
-      // capture filename: the stream is one logical capture, so a request
-      // in one dropped file pairs with its answer in a later one
-      .groupByKey(r => (r.commandCode, r.hopByHopId, r.endToEndId, r.sessionId))
-      .flatMapGroupsWithState[DiameterRec, DiameterRec](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (_, it: Iterator[DiameterRec], state: GroupState[DiameterRec]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.iterator // K3 residue flush
-            state.remove()
-            out
-          } else {
-            val out = Seq.newBuilder[DiameterRec]
-            for (m <- it.toSeq.sortBy(_.framesList.split(" ").head.toLong)) {
-              if (m.request) {
-                if (state.getOption.isEmpty) { // D1 retransmission drop
-                  state.update(m)
-                  state.setTimeoutDuration(timeoutMs)
-                }
-              } else state.getOption match {
-                case Some(req) =>
-                  val msisdn = if (req.msisdn.nonEmpty) req.msisdn else m.msisdn
-                  val imsi = if (req.imsi.nonEmpty) req.imsi else m.imsi
-                  out += req.copy(msisdn = msisdn, imsi = imsi)
-                  out += m.copy(msisdn = msisdn, imsi = imsi)
-                  state.remove()
-                case None => out += m
-              }
-            }
-            out.result().iterator
-          }
-      }
+    // unlike the batch path, the correlation key does NOT include the
+    // capture filename: the stream is one logical capture, so a request
+    // in one dropped file pairs with its answer in a later one
+    GroupStep.correlate(
+      decoded(spark, watchDir)
+        .groupByKey(r => (r.commandCode, r.hopByHopId, r.endToEndId, r.sessionId)),
+      ProcessingTime[DiameterRec](timeoutMs))(
+      _.framesList.split(" ").head.toLong, _.request) {
+      (_, o) => Stateful.rows(o, DiameterPipeline.enrich)
+    }
   }
 
   /** [[records]] on EVENT time, end-to-end: the correlation clock is the
@@ -110,40 +90,15 @@ object DiameterStream {
       watermarkDelay: String = "10 seconds",
       timeoutMs: Long = 60000): Dataset[DiameterRec] = {
     import spark.implicits._
-    decoded(spark, watchDir)
-      .map(r => TimedDiameterRec(r,
-        new java.sql.Timestamp(r.timeEpoch * 1000L + r.usecondsEpoch / 1000)))
-      .withWatermark("eventTime", watermarkDelay)
-      .groupByKey(t => (t.rec.commandCode, t.rec.hopByHopId, t.rec.endToEndId, t.rec.sessionId))
-      .flatMapGroupsWithState[TimedDiameterRec, DiameterRec](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_, it: Iterator[TimedDiameterRec], state: GroupState[TimedDiameterRec]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(_.rec).iterator // K3 residue flush
-            state.remove()
-            out
-          } else {
-            val out = Seq.newBuilder[DiameterRec]
-            for (t <- it.toSeq.sortBy(_.rec.framesList.split(" ").head.toLong)) {
-              val m = t.rec
-              if (m.request) {
-                if (state.getOption.isEmpty) { // D1 retransmission drop
-                  state.update(t)
-                  state.setTimeoutTimestamp(t.eventTime.getTime + timeoutMs)
-                }
-              } else state.getOption match {
-                case Some(reqT) =>
-                  val req = reqT.rec
-                  val msisdn = if (req.msisdn.nonEmpty) req.msisdn else m.msisdn
-                  val imsi = if (req.imsi.nonEmpty) req.imsi else m.imsi
-                  out += req.copy(msisdn = msisdn, imsi = imsi)
-                  out += m.copy(msisdn = msisdn, imsi = imsi)
-                  state.remove()
-                case None => out += m
-              }
-            }
-            out.result().iterator
-          }
-      }
+    GroupStep.correlate(
+      decoded(spark, watchDir)
+        .map(r => TimedDiameterRec(r,
+          new java.sql.Timestamp(r.timeEpoch * 1000L + r.usecondsEpoch / 1000)))
+        .withWatermark("eventTime", watermarkDelay)
+        .groupByKey(t => (t.rec.commandCode, t.rec.hopByHopId, t.rec.endToEndId, t.rec.sessionId)),
+      EventTime[TimedDiameterRec](_.eventTime.getTime + timeoutMs))(
+      _.rec.framesList.split(" ").head.toLong, _.rec.request) {
+      (_, o) => Stateful.rows((o._1.map(_.rec), o._2.map(_.rec)), DiameterPipeline.enrich)
+    }
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
 
 import graft.etl.Diameter
+import graft.operators.Stateful
+import graft.operators.Stateful.{Piece, Stash}
 
 /** One transport segment of a flow, as fed to the streaming reassembler.
   * `eventTime` is the capture timestamp (the watermark column). */
@@ -32,124 +34,39 @@ final case class AsmPair(
     resFrames: String,
     matched: Boolean)
 
-/** Per-flow stash carried across micro-batches. */
-final case class FlowStash(
-    buf: Array[Byte],
-    framesList: String,
-    firstFrame: Long,
-    firstTsMs: Long)
-
-/** Streaming R1/R2 reassembly for one flow key: the stash/prepend machine
-  * of `Stateful.reassemble` (`diameter.py:274-287,360-373`) lifted onto
-  * `transformWithState` `ValueState`, so a message split across
-  * *micro-batches* — not just across segments within one batch — still
-  * assembles. Greedy multi-emit: a buffer holding several complete
-  * messages yields one [[AsmMsg]] per message. A buffer whose declared
-  * length is undecidable is emitted as-is (decode fails → quarantined,
-  * the reference's path), which also bounds state on garbage flows.
+/** Streaming R1/R2 reassembly for one flow key: the
+  * [[Stateful.reassembleStep]] stash carried in a `transformWithState`
+  * `ValueState`, so a message split across *micro-batches* — not just
+  * across segments within one batch — still assembles. Each assembled
+  * message is decoded to an [[AsmMsg]]; a buffer whose declared length is
+  * undecidable is emitted as-is (decode fails → quarantined, the
+  * reference's path), which also bounds state on garbage flows.
   */
 class DiameterReassembleProcessor
     extends StatefulProcessor[String, SegEvent, AsmMsg] {
 
-  @transient private var stash: ValueState[FlowStash] = _
+  @transient private var stash: ValueState[Stash] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    stash = getHandle.getValueState[FlowStash]("stash",
-      Encoders.product[FlowStash], TTLConfig.NONE)
+    stash = getHandle.getValueState[Stash]("stash",
+      Encoders.product[Stash], TTLConfig.NONE)
 
   override def handleInputRows(key: String, rows: Iterator[SegEvent],
       timerValues: TimerValues): Iterator[AsmMsg] = {
-    val out = Seq.newBuilder[AsmMsg]
-    var st = if (stash.exists()) stash.get()
-             else FlowStash(Array.emptyByteArray, "", -1L, 0L)
-
-    def flushComplete(): Unit = {
-      var continue = true
-      while (continue && st.buf.nonEmpty) {
-        val want = Diameter.expectedLength(st.buf)
-        if (want > st.buf.length) continue = false // stash: wait for more
-        else {
-          val take = if (want > 0) want else st.buf.length
-          val msg = java.util.Arrays.copyOfRange(st.buf, 0, take)
-          Diameter.decode(msg)
-            .filter(_.commandCode != Diameter.CmdDeviceWatchdog)
-            .foreach { m =>
-              out += AsmMsg(
-                s"${m.commandCode}_${m.hopByHopId}_${m.endToEndId}_${m.sessionId}",
-                m.request, st.firstFrame, st.framesList,
-                new java.sql.Timestamp(st.firstTsMs))
-            }
-          val rest = java.util.Arrays.copyOfRange(st.buf, take, st.buf.length)
-          // frame attribution of a partially consumed buffer follows the
-          // batch machine: remaining bytes keep the accumulated frames list
-          st = if (rest.isEmpty) FlowStash(rest, "", -1L, 0L)
-               else st.copy(buf = rest)
-        }
-      }
+    val prior = if (stash.exists()) stash.get() else Stash.Empty
+    val pieces = rows.toSeq.sortBy(_.frame).iterator.map { seg =>
+      val ms = seg.eventTime.getTime
+      Piece(seg.frame, ms / 1000, (ms % 1000 * 1000).toInt, "", "", key, seg.payload)
     }
-
-    for (seg <- rows.toSeq.sortBy(_.frame)) {
-      if (st.buf.isEmpty)
-        st = FlowStash(seg.payload, seg.frame.toString, seg.frame,
-          seg.eventTime.getTime)
-      else
-        st = st.copy(buf = st.buf ++ seg.payload,
-          framesList = st.framesList + " " + seg.frame)
-      flushComplete()
+    val (next, done) = Stateful.reassembleStep(prior, pieces, Diameter.expectedLength)
+    if (next.buf.isEmpty) stash.clear() else stash.update(next)
+    done.iterator.flatMap { a =>
+      Diameter.decode(a.payload)
+        .filter(_.commandCode != Diameter.CmdDeviceWatchdog)
+        .map(m => AsmMsg(s"${m.commandCode}_${m.hopByHopId}_${m.endToEndId}_${m.sessionId}",
+          m.request, a.firstFrame, a.framesList,
+          new java.sql.Timestamp(a.tsSec * 1000 + a.tsUsec / 1000)))
     }
-
-    if (st.buf.isEmpty) stash.clear() else stash.update(st)
-    out.result().iterator
-  }
-}
-
-/** J1 correlation over reassembled messages — the same pending-slot +
-  * deleted-timer machine as [[CorrelateProcessor]], emitting the frames
-  * lists of both sides. */
-class AsmCorrelateProcessor(timeoutMs: Long)
-    extends StatefulProcessor[String, AsmMsg, AsmPair] {
-
-  @transient private var pending: ValueState[AsmMsg] = _
-  @transient private var expiry: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    pending = getHandle.getValueState[AsmMsg]("pending",
-      Encoders.product[AsmMsg], TTLConfig.NONE)
-    expiry = getHandle.getValueState[Long]("expiry",
-      Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: String, rows: Iterator[AsmMsg],
-      timerValues: TimerValues): Iterator[AsmPair] = {
-    val out = Seq.newBuilder[AsmPair]
-    for (m <- rows.toSeq.sortBy(_.firstFrame)) {
-      if (m.isRequest) {
-        if (!pending.exists()) { // D1: retransmission dropped
-          pending.update(m)
-          val at = timerValues.getCurrentProcessingTimeInMs() + timeoutMs
-          expiry.update(at)
-          getHandle.registerTimer(at)
-        }
-      } else if (pending.exists()) {
-        out += AsmPair(key, pending.get().framesList, m.framesList, matched = true)
-        if (expiry.exists()) getHandle.deleteTimer(expiry.get())
-        pending.clear(); expiry.clear()
-      } else {
-        out += AsmPair(key, "", m.framesList, matched = false)
-      }
-    }
-    out.result().iterator
-  }
-
-  override def handleExpiredTimer(key: String, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[AsmPair] = {
-    val isCurrent = pending.exists() && expiry.exists() &&
-      expiry.get() == expiredTimerInfo.getExpiryTimeInMs()
-    if (isCurrent) {
-      val out = Iterator(AsmPair(key, pending.get().framesList, "", matched = false))
-      pending.clear(); expiry.clear()
-      out
-    } else Iterator.empty
   }
 }
 
@@ -180,7 +97,10 @@ object ReassembleStream {
       .transformWithState(new DiameterReassembleProcessor,
         "eventTime", OutputMode.Append())
       .groupByKey(_.key)
-      .transformWithState(new AsmCorrelateProcessor(timeoutMs),
+      .transformWithState(
+        new CorrelateProcessor[AsmMsg, AsmPair](timeoutMs, msgEnc, _.firstFrame, _.isRequest)(
+          (key, o) => Iterator(AsmPair(key, o._1.fold("")(_.framesList),
+            o._2.fold("")(_.framesList), o._1.isDefined && o._2.isDefined))),
         TimeMode.ProcessingTime(), OutputMode.Append())
   }
 }

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.Stateful.Outcome
+import graft.streaming.GroupStep.{EventTime, ProcessingTime}
 
 /** [[Sessions.correlateEventTime]] input: a correlation event with its
   * event-time column (top-level for encoder codegen). */
@@ -10,8 +12,8 @@ final case class TimedCorrEvent(key: String, isRequest: Boolean, frame: Long,
 
 /** Streaming statefuls (SURVEY §2.10): the reference is batch-per-file
   * with dicts flushed at EOF; the streaming extension closes state by
-  * *timeout* instead of EOF — `flatMapGroupsWithState` with processing-time
-  * timeouts stands in for the dict + residual flush (K3,
+  * *timeout* instead of EOF — `flatMapGroupsWithState` timeouts
+  * ([[GroupStep]]) stand in for the dict + residual flush (K3,
   * `diameter.py:580-589`). Documented as an extension: the reference
   * defines no late-data policy.
   *
@@ -37,118 +39,49 @@ object Sessions {
     * the processing-time timeout. */
   def sessionize(events: Dataset[SessionEvent], gapMicros: Long, flushAtEnd: Boolean = false)(
       implicit e1: Encoder[SessionSummary], e2: Encoder[SessionBuf], e3: Encoder[Long]): Dataset[SessionSummary] = {
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[SessionBuf, SessionSummary](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (key: Long, it: Iterator[SessionEvent], state: GroupState[SessionBuf]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption
-              .map(b => SessionSummary(key, b.start, b.end, b.n, b.sum)).iterator
-            state.remove()
-            out
-          } else {
-            val sorted = it.toSeq.sortBy(e => (e.tsMicros, e.id))
-            val closed = Seq.newBuilder[SessionSummary]
-            var buf = state.getOption.orNull
-            for (ev <- sorted) {
-              if (buf == null) buf = SessionBuf(ev.tsMicros, ev.tsMicros, 0L, 0.0)
-              else if (ev.tsMicros - buf.end > gapMicros) {
-                closed += SessionSummary(key, buf.start, buf.end, buf.n, buf.sum)
-                buf = SessionBuf(ev.tsMicros, ev.tsMicros, 0L, 0.0)
-              }
-              buf = buf.copy(end = ev.tsMicros, n = buf.n + 1, sum = buf.sum + ev.value)
-            }
-            if (buf != null) {
-              if (flushAtEnd) {
-                closed += SessionSummary(key, buf.start, buf.end, buf.n, buf.sum)
-                state.remove()
-              } else {
-                state.update(buf)
-                state.setTimeoutDuration(gapMicros / 1000 + 1)
-              }
-            }
-            closed.result().iterator
+    def summary(key: Long, b: SessionBuf) = SessionSummary(key, b.start, b.end, b.n, b.sum)
+    GroupStep.run(events.groupByKey(_.key), ProcessingTime[SessionBuf](gapMicros / 1000 + 1)) {
+      (key: Long, prior: Option[SessionBuf], it: Iterator[SessionEvent]) =>
+        val closed = Seq.newBuilder[SessionSummary]
+        var buf = prior.orNull
+        for (ev <- it.toSeq.sortBy(e => (e.tsMicros, e.id))) {
+          if (buf == null) buf = SessionBuf(ev.tsMicros, ev.tsMicros, 0L, 0.0)
+          else if (ev.tsMicros - buf.end > gapMicros) {
+            closed += summary(key, buf)
+            buf = SessionBuf(ev.tsMicros, ev.tsMicros, 0L, 0.0)
           }
-      }
+          buf = buf.copy(end = ev.tsMicros, n = buf.n + 1, sum = buf.sum + ev.value)
+        }
+        if (flushAtEnd && buf != null) {
+          closed += summary(key, buf)
+          buf = null
+        }
+        (Option(buf), closed.result().iterator)
+    } { (key, b) => Iterator(summary(key, b)) }
   }
 
-  /** Streaming J1: request stored per key, answer emits the correlated
-    * pair; unmatched requests flush on state timeout (the streaming analog
-    * of the EOF residue flush). */
+  /** J1 event and output pair: request stored per key, answer emits the
+    * correlated pair; unmatched requests flush on state timeout (the
+    * streaming analog of the EOF residue flush). */
   final case class CorrEvent(key: String, isRequest: Boolean, frame: Long, payload: String)
   final case class CorrPair(key: String, reqFrame: Long, resFrame: Long, matched: Boolean)
 
-  def correlate(events: Dataset[CorrEvent], timeoutMs: Long)(
-      implicit e1: Encoder[CorrPair], e2: Encoder[CorrEvent], e3: Encoder[String]): Dataset[CorrPair] = {
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CorrEvent, CorrPair](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (key: String, it: Iterator[CorrEvent], state: GroupState[CorrEvent]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(r => CorrPair(key, r.frame, -1L, matched = false)).iterator
-            state.remove()
-            out
-          } else {
-            val out = Seq.newBuilder[CorrPair]
-            for (ev <- it.toSeq.sortBy(_.frame)) {
-              if (ev.isRequest) {
-                if (state.getOption.isEmpty) { // D1: retransmission dropped
-                  state.update(ev)
-                  state.setTimeoutDuration(timeoutMs)
-                }
-              } else state.getOption match {
-                case Some(req) =>
-                  out += CorrPair(key, req.frame, ev.frame, matched = true)
-                  state.remove()
-                case None =>
-                  out += CorrPair(key, -1L, ev.frame, matched = false)
-              }
-            }
-            out.result().iterator
-          }
-      }
-  }
+  /** One J1 outcome as a [[CorrPair]]; a missing side's frame is -1. */
+  private[streaming] def corrPair[T](key: String, o: Outcome[T])(frame: T => Long): CorrPair =
+    CorrPair(key, o._1.fold(-1L)(frame), o._2.fold(-1L)(frame), o._1.isDefined && o._2.isDefined)
 
-  /** [[correlate]] on EVENT time: the unmatched-request flush fires when
-    * the WATERMARK passes request-time + timeout, not when a wall clock
+  /** J1 on EVENT time: the unmatched-request flush fires when the
+    * WATERMARK passes request-time + timeout, not when a wall clock
     * does — so a 100 TB backfill replayed at full speed produces exactly
     * the rows the live stream did (processing-time flushes cannot make
-    * that promise). The state machine itself is the same J1 logic. */
+    * that promise). The state machine is
+    * [[graft.operators.Stateful.correlateStep]]. */
   def correlateEventTime(events: Dataset[TimedCorrEvent], watermarkDelay: String,
       timeoutMs: Long)(
       implicit e1: Encoder[CorrPair], e2: Encoder[TimedCorrEvent],
-      e3: Encoder[String]): Dataset[CorrPair] = {
-    events
-      .withWatermark("eventTime", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TimedCorrEvent, CorrPair](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, it: Iterator[TimedCorrEvent], state: GroupState[TimedCorrEvent]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption
-              .map(r => CorrPair(key, r.frame, -1L, matched = false)).iterator
-            state.remove()
-            out
-          } else {
-            val out = Seq.newBuilder[CorrPair]
-            for (ev <- it.toSeq.sortBy(_.frame)) {
-              if (ev.isRequest) {
-                if (state.getOption.isEmpty) { // D1: retransmission dropped
-                  state.update(ev)
-                  state.setTimeoutTimestamp(ev.eventTime.getTime + timeoutMs)
-                }
-              } else state.getOption match {
-                case Some(req) =>
-                  out += CorrPair(key, req.frame, ev.frame, matched = true)
-                  state.remove()
-                case None =>
-                  out += CorrPair(key, -1L, ev.frame, matched = false)
-              }
-            }
-            out.result().iterator
-          }
-      }
-  }
+      e3: Encoder[String]): Dataset[CorrPair] =
+    GroupStep.correlate(
+      events.withWatermark("eventTime", watermarkDelay).groupByKey(_.key),
+      EventTime[TimedCorrEvent](_.eventTime.getTime + timeoutMs))(
+      _.frame, _.isRequest) { (key, o) => Iterator(corrPair(key, o)(_.frame)) }
 }

@@ -6,19 +6,20 @@ import org.apache.spark.sql.streaming._
 import graft.etl.{Sigshark, TcapPkt, TcapSessState}
 import graft.etl.Sigshark.Transaction
 
-/** TCAP sessionization on the `transformWithState` API (the Spark 4
-  * arbitrary-stateful upgrade path from [[TcapStream]]'s
-  * `flatMapGroupsWithState`): the SAME incremental machine
-  * ([[Sigshark.stepTcap]]) with explicit state slots and a registered
-  * sliding inactivity timer per capture file for the residue flush.
+/** Streaming TCAP transaction sessionization (§2.10 analog of the batch
+  * [[Sigshark.sessionize]]) on the `transformWithState` API: the SAME
+  * incremental machine ([[Sigshark.stepTcap]]), keyed by capture file,
+  * with still-open transactions and the tid-alias map carried in state —
+  * a begin in one micro-batch closed by an end in a later one emits
+  * exactly the batch machine's transaction.
   *
-  * The timer slides: every micro-batch that brings packets for the key
+  * A sliding inactivity timer per capture file is the streaming analog of
+  * the batch EOF flush: every micro-batch that brings packets for the key
   * deletes the previously registered timer and registers
-  * `now + timeoutMs`, so the flush fires only after true inactivity
-  * (matching [[TcapStream]]'s `setTimeoutDuration` semantics — a
-  * GroupState timeout also re-arms per batch). Requires the RocksDB
-  * state store provider
-  * (`spark.sql.streaming.stateStore.providerClass`).
+  * `now + timeoutMs`, so the flush fires only after true inactivity; on
+  * expiry the carried state surfaces (only) under `keepPartial`,
+  * mirroring sigshark's `--incomplete`. Requires the RocksDB state store
+  * provider (`spark.sql.streaming.stateStore.providerClass`).
   */
 class TcapProcessor(timeoutMs: Long, keepPartial: Boolean)
     extends StatefulProcessor[String, TcapPkt, Transaction] {

@@ -21,10 +21,8 @@ class ClusterSampleStreamSpec extends AnyFunSuite {
   test("per-cluster quota: first arrivals admitted, saturation persists across batches") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       val x = Seq(1.0f, 0.0f); val y = Seq(0.0f, 1.0f)
       val input = MemoryStream[(Long, Seq[Float])]
       val q = ClusterSampleStream.gate(
@@ -55,16 +53,14 @@ class ClusterSampleStreamSpec extends AnyFunSuite {
           ClusterAdmit(21L, 1L, 2L, true),
           ClusterAdmit(22L, 1L, 3L, false)))
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("stream admitted counts equal the batch cap per cluster") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       val rows = (0 until 30).map { i =>
         val v = if (i % 3 == 0) Seq(1.0f, 0.001f * i) else Seq(0.001f * i, 1.0f)
         (i.toLong, v)
@@ -90,6 +86,6 @@ class ClusterSampleStreamSpec extends AnyFunSuite {
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(streamCounts == batchCounts && streamCounts.values.sum == 8L)
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 }

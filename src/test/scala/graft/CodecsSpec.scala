@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.BinaryCodecs._
-import graft.operators.Stateful
 
 /** Unit tests for the byte-level codec family (SURVEY §5 item 1: TBCD
   * vectors incl. f-filler, BCD swap, masks, endian readers) plus
@@ -58,10 +57,5 @@ class CodecsSpec extends AnyFunSuite {
     val b = Array(0x01, 0x02, 0x03, 0x04).map(_.toByte)
     assert(beLong(b, 0, 4) == 0x01020304L)
     assert(leLong(b, 0, 4) == 0x04030201L)
-  }
-
-  test("A2 lastNonEmpty skips empties and nulls") {
-    assert(Stateful.lastNonEmpty(Seq("a", "", null, "b", "")) == "b")
-    assert(Stateful.lastNonEmpty(Seq("", null)) == "")
   }
 }

@@ -18,10 +18,8 @@ class CorrelateTwsSpec extends AnyFunSuite {
   test("transformWithState correlate: pairs + timer-based residue flush") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       val input = MemoryStream[CorrEvent]
       val q = CorrelateTws.correlate(input.toDS(), timeoutMs = 500)
         .writeStream.format("memory").queryName("corr_tws")
@@ -42,17 +40,15 @@ class CorrelateTwsSpec extends AnyFunSuite {
             .contains(Sessions.CorrPair("k2", 3L, -1L, matched = false))
         })
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("transformWithState correlate: matched request deletes its timer " +
       "(no spurious flush of a later request on the same key)") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       val input = MemoryStream[CorrEvent]
       val q = CorrelateTws.correlate(input.toDS(), timeoutMs = 6000)
         .writeStream.format("memory").queryName("corr_tws2")
@@ -81,6 +77,6 @@ class CorrelateTwsSpec extends AnyFunSuite {
         })
         assert(spark.sql("SELECT * FROM corr_tws2 WHERE NOT matched").count() == 0)
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 }

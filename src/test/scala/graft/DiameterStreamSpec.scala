@@ -14,10 +14,9 @@ import graft.streaming.DiameterStream
   */
 class DiameterStreamSpec extends AnyFunSuite {
 
-  // Test 1 (ProcessingTimeTimeout) uses bounded StreamSync.poll calls
-  // and a consumed-rows wait before its zero-count assert; test 2 is
-  // event-time (EventTimeTimeout) and drains deterministically on the
-  // query handle.
+  // The ProcessingTimeTimeout tests use bounded StreamSync.poll calls
+  // and a consumed-rows wait before a zero-count assert; the event-time
+  // test (EventTimeTimeout) drains deterministically on the query handle.
 
   test("drop-dir stream: cross-file correlation across micro-batches") {
     val spark = SparkTest.spark
@@ -78,6 +77,10 @@ class DiameterStreamSpec extends AnyFunSuite {
       // batch 2: lone request at 2000s — held (watermark still behind)
       Files.write(dir.resolve("e2.pcap"), pcapFile(Seq((2000L, 0, sctpFrame(a, b, req2)))))
       q.processAllAvailable()
+      // batch 2b: e2's retransmission in a LATER file is dropped, and the
+      // pending request's flush deadline must survive it
+      Files.write(dir.resolve("e2r.pcap"), pcapFile(Seq((2000L, 500000, sctpFrame(a, b, req2)))))
+      q.processAllAvailable()
       assert(spark.sql("SELECT * FROM diam_et").count() == 2)
       // batch 3: unrelated request at 3000s advances the watermark past
       // 2000s + 1s, so e2's pending request flushes as the residue —
@@ -87,6 +90,34 @@ class DiameterStreamSpec extends AnyFunSuite {
         spark.sql("SELECT * FROM diam_et WHERE sessionId = 'e2'").count() == 1
       })
       assert(spark.sql("SELECT * FROM diam_et").count() == 3)
+      assert(spark.sql("SELECT * FROM diam_et WHERE sessionId = 'e2'")
+        .as[graft.etl.DiameterRec].head().pcapFilename.endsWith("e2.pcap"))
+    } finally q.stop()
+  }
+
+  test("drop-dir stream: every DATA chunk of a bundled SCTP packet decodes") {
+    val spark = SparkTest.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftdropchunks")
+    val a = Array[Byte](10, 0, 0, 1)
+    val b = Array[Byte](10, 0, 0, 2)
+    val req = diameterMsg(request = true, 316, 8, 8, strAvp(263, "s8"),
+      groupedAvp(443, u32Avp(450, 0), strAvp(444, "4242")))
+    val ans = diameterMsg(request = false, 316, 8, 8, strAvp(263, "s8"), u32Avp(268, 2001))
+    // one SCTP packet, two DATA chunks: the second chunk is appended
+    // after the first one's 12-byte common header
+    val sctp = cat(sctpData(3868, 3868, 1, 1, 46L, req),
+      sctpData(3868, 3868, 1, 2, 46L, ans).drop(12))
+
+    val q = DiameterStream.records(spark, dir.toString, timeoutMs = 600000)
+      .writeStream.format("memory").queryName("diam_chunks")
+      .outputMode("append").trigger(Trigger.ProcessingTime(100)).start()
+    try {
+      Files.write(dir.resolve("bundle.pcap"), pcapFile(Seq((1000L, 0, ether(ipv4(132, a, b, sctp))))))
+      assert(StreamSync.poll(60000) { spark.sql("SELECT * FROM diam_chunks").count() == 2 })
+      val rows = spark.sql("SELECT * FROM diam_chunks").as[graft.etl.DiameterRec].collect()
+      assert(rows.map(_.request).toSet == Set(true, false))
+      assert(rows.forall(_.msisdn == "4242"))
     } finally q.stop()
   }
 }

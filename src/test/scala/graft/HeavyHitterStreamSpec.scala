@@ -27,10 +27,8 @@ class HeavyHitterStreamSpec extends AnyFunSuite {
 
   test("SpaceSaving candidates are a superset of the batch heavy hitters with valid brackets") {
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       val k = 4
       val input = MemoryStream[(Long, String)]
       val q = HeavyHitterStream.candidates(
@@ -72,7 +70,7 @@ class HeavyHitterStreamSpec extends AnyFunSuite {
           assert(lo <= trueCounts(t) && trueCounts(t) <= up, s"bracket broken for $t")
         }
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("streaming doc-length histogram accumulates to the batch histogram; quantile read-out matches") {

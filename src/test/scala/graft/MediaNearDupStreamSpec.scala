@@ -13,17 +13,10 @@ import graft.streaming.{MediaNearDupStream, MediaNearPair}
   * quiesces, so waits are StreamSync.poll / awaitInputRows. */
 class MediaNearDupStreamSpec extends AnyFunSuite {
 
-  private def withRocks[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
   test("near signature arriving in a later micro-batch is flagged on arrival, once") {
     val spark = SparkTest.spark
     import spark.implicits._
-    withRocks(spark) {
+    SparkTest.withRocksDb {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val a = 0x0123456789abcd00L
       val far = ~a // ham 64 from a
@@ -52,7 +45,7 @@ class MediaNearDupStreamSpec extends AnyFunSuite {
   test("stream pair set equals the batch pigeonhole kernel's") {
     val spark = SparkTest.spark
     import spark.implicits._
-    withRocks(spark) {
+    SparkTest.withRocksDb {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val rnd = new scala.util.Random(23)
       val bases = Seq.fill(6)(rnd.nextLong())
@@ -83,7 +76,7 @@ class MediaNearDupStreamSpec extends AnyFunSuite {
   test("image wrapper: a duplicate PNG arriving later flags on arrival") {
     val spark = SparkTest.spark
     import spark.implicits._
-    withRocks(spark) {
+    SparkTest.withRocksDb {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val png = {
         val img = new java.awt.image.BufferedImage(9, 8,
@@ -116,7 +109,7 @@ class MediaNearDupStreamSpec extends AnyFunSuite {
   test("maxBucket saturates a hot bucket: bounded state, drops counted") {
     val spark = SparkTest.spark
     import spark.implicits._
-    withRocks(spark) {
+    SparkTest.withRocksDb {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val acc = spark.sparkContext.longAccumulator(
         graft.operators.Dedup.SkippedBucketsAcc)

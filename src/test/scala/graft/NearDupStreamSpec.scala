@@ -22,10 +22,8 @@ class NearDupStreamSpec extends AnyFunSuite {
   test("duplicate across micro-batches pairs once; unrelated doc stays unpaired") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       val template = "the quick brown fox jumps over the lazy dog again and again"
       val other = "completely different content with no shared trigrams at all here"
       val input = MemoryStream[(Long, String)]
@@ -49,16 +47,14 @@ class NearDupStreamSpec extends AnyFunSuite {
         val p = spark.sql("SELECT * FROM neardup_stream").as[NearPair].head()
         assert(p == NearPair(1L, 3L, 1.0))
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("maxBucket saturates a hot bucket: bounded state, drops counted") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       val template = "the quick brown fox jumps over the lazy dog again and again"
       val acc = spark.sparkContext.longAccumulator(
         graft.operators.Dedup.SkippedBucketsAcc)
@@ -83,6 +79,6 @@ class NearDupStreamSpec extends AnyFunSuite {
         assert(StreamSync.awaitInputRows(q, 6))
         assert(spark.sql("SELECT * FROM neardup_sat").count() == 6) // no new pairs
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 }

@@ -120,9 +120,11 @@ class ProtocolSpec extends AnyFunSuite {
     // two complete messages in one segment → greedy double emit
     val out2 = Stateful.reassemble(Seq(piece(3, cat(msg, msg))), Diameter.expectedLength).toSeq
     assert(out2.size == 2 && out2.forall(_.payload.sameElements(msg)))
-    // incomplete residue dropped by default, kept when asked
+    // incomplete residue dropped at EOF, carried in the step's state
     assert(Stateful.reassemble(Seq(piece(4, a)), Diameter.expectedLength).isEmpty)
-    assert(Stateful.reassemble(Seq(piece(4, a)), Diameter.expectedLength, emitResidue = true).size == 1)
+    val (left, done) = Stateful.reassembleStep(Stateful.Stash.Empty,
+      Iterator(piece(4, a)), Diameter.expectedLength)
+    assert(done.isEmpty && left.buf.sameElements(a) && left.frames == Seq(4L))
   }
 
   test("J1/D1 correlate: dedup retransmission, bidirectional fill, residue") {

@@ -22,10 +22,8 @@ class ReassembleStreamSpec extends AnyFunSuite {
   test("multi-segment message split across micro-batches reassembles, then correlates") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       val req = TestBytes.diameterMsg(request = true, cmd = 272, hbh = 7, e2e = 9,
         TestBytes.strAvp(263, "sess-1"), TestBytes.strAvp(264, "client.example"))
       val ans = TestBytes.diameterMsg(request = false, cmd = 272, hbh = 7, e2e = 9,
@@ -52,17 +50,15 @@ class ReassembleStreamSpec extends AnyFunSuite {
         val pair = spark.sql("SELECT * FROM asm_corr").as[AsmPair].head()
         assert(pair == AsmPair("272_7_9_sess-1", "1 2", "3", matched = true))
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("greedy multi-emit: one segment carrying two messages yields both; " +
       "request residue flushes unmatched on timer") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       val req = TestBytes.diameterMsg(request = true, cmd = 316, hbh = 1, e2e = 1,
         TestBytes.strAvp(263, "s2"))
       val ans = TestBytes.diameterMsg(request = false, cmd = 316, hbh = 1, e2e = 1,
@@ -90,6 +86,6 @@ class ReassembleStreamSpec extends AnyFunSuite {
             .contains(AsmPair("317_2_2_s3", "2", "", matched = false))
         })
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 }

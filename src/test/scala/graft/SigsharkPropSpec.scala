@@ -16,7 +16,7 @@ import graft.etl.Sigshark.Transaction
   * against an independent single-threaded transcription of the tool's
   * own scan (`sigshark.py:470-520`), plus the chunk-composition law
   * that makes the batch machine and the streaming operator
-  * (`TcapStream`) the same machine.
+  * (`TcapTws`) the same machine.
   *
   * One documented deviation mirrored by the model: on a close that
   * reaches a STALE alias (its transaction no longer open) the tool

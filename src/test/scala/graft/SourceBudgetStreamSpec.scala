@@ -19,10 +19,8 @@ class SourceBudgetStreamSpec extends AnyFunSuite {
   test("per-source budget: admit until saturated, stay saturated across batches") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       def words(n: Int) = Seq.fill(n)("w").mkString(" ")
       val input = MemoryStream[(Long, String, String)]
       // budget 5 tokens per source
@@ -61,16 +59,14 @@ class SourceBudgetStreamSpec extends AnyFunSuite {
         assert(spark.sql("SELECT * FROM budget_gate WHERE source = 'a'").count() == 2)
         assert(spark.sql("SELECT * FROM budget_gate WHERE docId = 8").count() == 1)
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("gateBpe prices documents in trained-tokenizer symbols, not whitespace tokens") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       // textbook merges (BpeSpec): (u,g), (u,n), (h,ug) →
       // "hug" = 1 symbol, "bug" = [b, ug] = 2 symbols
       val merges = Seq(("u", "g"), ("u", "n"), ("h", "ug"))
@@ -96,6 +92,6 @@ class SourceBudgetStreamSpec extends AnyFunSuite {
           graft.streaming.BudgetedDoc(1L, "a", 3L, 3L),
           graft.streaming.BudgetedDoc(2L, "a", 2L, 5L)))
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 }

@@ -22,10 +22,8 @@ class SpanDedupStreamSpec extends AnyFunSuite {
   test("second occurrence marks both docs' windows; third marks immediately") {
     val spark = SparkTest.spark
     import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    try {
+    SparkTest.withRocksDb {
       val shared = "alpha beta gamma delta"  // exactly one 4-token window
       val input = MemoryStream[(Long, String)]
       val q = SpanDedupStream.dupWindows(input.toDS().toDF("doc_id", "text"),
@@ -53,6 +51,6 @@ class SpanDedupStreamSpec extends AnyFunSuite {
           .as[DupWindow].collect().toSet
         assert(marks === Set(DupWindow(1L, 1), DupWindow(3L, 1), DupWindow(4L, 1)))
       } finally q.stop()
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 }

@@ -11,4 +11,13 @@ object SparkTest {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `body` with the RocksDB state store provider, which
+    * `transformWithState` queries require, and unsets it afterwards. */
+  def withRocksDb[T](body: => T): T = {
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  }
 }

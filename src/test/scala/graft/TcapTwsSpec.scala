@@ -7,30 +7,27 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.TcapPkt
 import graft.streaming.TcapTws
 
-/** TCAP sessionization on transformWithState: the same cross-micro-batch
-  * alias-close behavior as the flatMapGroupsWithState variant, plus the
-  * registered-timer residue flush for still-open transactions.
+/** Streaming TCAP sessionization on transformWithState: a transaction
+  * whose begin, continue and end/abort land in different micro-batches
+  * closes exactly like the batch machine — including the tid-alias close
+  * path, where the close references the responder's otid that only the
+  * continue introduced — plus the registered-timer residue flush for
+  * still-open transactions.
   */
 class TcapTwsSpec extends AnyFunSuite {
 
   // TcapTws registers processing-time timers (transformWithState), so
   // waits are bounded StreamSync.poll calls — the engine keeps a timer
-  // batch pending and processAllAvailable would not be safe.
-
-  private def withRocksDb[T](body: => T): T = {
-    val spark = SparkTest.spark
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
+  // batch pending and processAllAvailable would not be safe. A zero-count
+  // check first waits for the batch to have CONSUMED the rows
+  // (StreamSync.awaitInputRows) so it can't pass vacuously.
 
   private def pkt(cap: String)(frame: Long, mt: String, cgS: Int, cgG: String, ot: Long,
       cdS: Int, cdG: String, dt: Long) =
     TcapPkt(cap, frame, 100L + frame, 0, mt, ot, dt, cgS, cgG, cdS, cdG)
 
   test("begin/continue/abort across micro-batches close via the alias map") {
-    withRocksDb {
+    SparkTest.withRocksDb {
       val spark = SparkTest.spark
       import spark.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -53,8 +50,65 @@ class TcapTwsSpec extends AnyFunSuite {
     }
   }
 
+  test("begin/continue/end across micro-batches close via the alias map") {
+    SparkTest.withRocksDb {
+      val spark = SparkTest.spark
+      import spark.implicits._
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val p = pkt("tws3.pcap") _
+      val input = MemoryStream[TcapPkt]
+      val q = TcapTws.transactions(input.toDS(), timeoutMs = 60000)
+        .writeStream.format("memory").queryName("tcap_tws3")
+        .outputMode("append").trigger(Trigger.ProcessingTime(50)).start()
+      try {
+        // begin opens 6_ga_68; the responder's continue links 8_gb_85;
+        // the end is addressed to the responder tid and closes via alias
+        input.addData(p(1, "begin", 6, "ga", 0x44, 8, "gb", -1L))
+        input.addData(p(2, "continue", 8, "gb", 0x55, 6, "ga", 0x44))
+        input.addData(p(3, "end", 6, "ga", -1L, 8, "gb", 0x55))
+        assert(StreamSync.poll(60000) {
+          spark.sql("SELECT * FROM tcap_tws3").count() == 1
+        })
+        val row = spark.sql("SELECT key, frames FROM tcap_tws3").collect().head
+        assert(row.getString(0) == "6_ga_68")
+        assert(row.getSeq[Long](1) == Seq(1L, 2L, 3L))
+      } finally q.stop()
+    }
+  }
+
+  test("orphan end in its own micro-batch is dropped; state cleared after close") {
+    SparkTest.withRocksDb {
+      val spark = SparkTest.spark
+      import spark.implicits._
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      val p = pkt("tws4.pcap") _
+      val input = MemoryStream[TcapPkt]
+      val q = TcapTws.transactions(input.toDS(), timeoutMs = 60000)
+        .writeStream.format("memory").queryName("tcap_tws4")
+        .outputMode("append").trigger(Trigger.ProcessingTime(50)).start()
+      try {
+        // orphan end (nothing open, no alias) → dropped
+        input.addData(p(1, "end", 6, "ga", -1L, 8, "gb", 0x99))
+        // begin opens 6_ga_66; an end addressed to 8_gb_66 has no alias yet
+        input.addData(p(2, "begin", 6, "ga", 0x42, 8, "gb", -1L))
+        input.addData(p(3, "end", 8, "gb", -1L, 8, "gb", 0x42))
+        assert(StreamSync.awaitInputRows(q, 3))
+        assert(spark.sql("SELECT * FROM tcap_tws4").count() == 0)
+        // responder continue links 8_gb_153 ↔ 6_ga_66; end to 8_gb_153 closes
+        input.addData(p(4, "continue", 8, "gb", 0x99, 6, "ga", 0x42))
+        input.addData(p(5, "end", 6, "ga", -1L, 8, "gb", 0x99))
+        assert(StreamSync.poll(60000) {
+          spark.sql("SELECT * FROM tcap_tws4").count() == 1
+        })
+        val row = spark.sql("SELECT key, frames FROM tcap_tws4").collect().head
+        assert(row.getString(0) == "6_ga_66")
+        assert(row.getSeq[Long](1) == Seq(2L, 4L, 5L))
+      } finally q.stop()
+    }
+  }
+
   test("registered timer flushes a still-open transaction under keepPartial") {
-    withRocksDb {
+    SparkTest.withRocksDb {
       val spark = SparkTest.spark
       import spark.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
